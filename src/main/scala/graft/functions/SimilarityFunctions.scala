@@ -7,15 +7,17 @@ import org.apache.spark.sql.functions._
   *
   * Cost model (measured, not assumed): Catalyst higher-order functions
   * (`zip_with`/`aggregate`) evaluate INTERPRETED — fine for a one-shot
-  * dot product, wrong for anything per-plane. The LSH sign bits are
-  * therefore computed from per-dimension `element_at` reads (codegen'd
-  * `ElementAt` + adds, the hyperplane ±1 signs folded into the plan as
-  * add/subtract): ONE logical pass over the vector produces every
-  * plane's projection, no lambda dispatch in the hot loop. (Measured
-  * boundary: the expansion pays a one-time codegen-compile cost and
-  * wins when many planes read each row; for a single per-pair dot
-  * product the tight interpreted loop of `intDot` is ~3× faster — so
-  * scoring paths keep the HOF.)
+  * dot product, wrong for anything per-plane. The LSH signatures
+  * ([[bandedLshKeysQ]], [[lshBucketQ]]) are therefore native
+  * single-node expressions (`BandedSig.scala`): one tight loop over the
+  * quantized vector with the ±1 hyperplane matrix precomputed, a
+  * 1-node Catalyst tree. The unrolled column form ([[signBitsQ]] — one
+  * `element_at` per dimension, the signs folded in as add/subtract) is
+  * kept as their equivalence reference and as the shape the DuckDB SQL
+  * mirrors spell out; it compiles thousands of nodes per query, so no
+  * query plans through it. Per-pair scoring keeps the interpreted HOF
+  * `intDot` (or the native `dot_i64`): for a single dot product the
+  * tight loop beats an `element_at` expansion ~3×.
   *
   * Scale path: brute-force cosine is O(Q×N×d) and only acceptable for a
   * small query set. Blocking/search use BANDED random-hyperplane
@@ -51,14 +53,6 @@ object SimilarityFunctions {
 
   /** The ±1 hyperplane for plane j in `dims` dimensions. */
   def plane(j: Int, dims: Int): Seq[Int] = (1 to dims).map(planeComponent(j, _))
-
-  /** Random-hyperplane LSH bucket id: bit j set iff dot(v, plane_j)>0. */
-  def lshBucket(vec: Column, numPlanes: Int, dims: Int): Column =
-    (0 until numPlanes).map { j =>
-      val p = plane(j, dims)
-      val planeLit = array(p.map(x => lit(x.toDouble)): _*)
-      when(dot(vec, planeLit) > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** All `numPlanes` hyperplane sign bits of a quantized vector,
     * computed in ONE pass: each dimension is read once via codegen'd
@@ -150,9 +144,10 @@ object SimilarityFunctions {
   def intDot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, v) => acc + v)
 
-  /** [[lshBucket]] over a quantized vector (integer-exact sign tests) —
-    * the native single-pass kernel (see [[bandedLshKeysQ]]); callers
-    * register via NativeExpressions.register. */
+  /** Random-hyperplane LSH bucket id of a quantized vector: bit j set
+    * iff dot(v, plane_j) > 0 (integer-exact sign tests) — the native
+    * single-pass kernel (see [[bandedLshKeysQ]]); callers register via
+    * NativeExpressions.register. */
   def lshBucketQ(qvec: Column, numPlanes: Int, dims: Int): Column =
     call_function("lsh_bucket_packed_q", qvec, lit(numPlanes), lit(dims))
 

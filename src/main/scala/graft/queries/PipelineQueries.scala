@@ -32,8 +32,10 @@ object PipelineQueries {
   private def shinglesSql(n: Int): String = OracleSql.shinglesSql(n)
 
   /** Signed projection Σ ±v[i] of quantized vector `v` onto hyperplane
-    * `j` — the ±1 components become literal +/− terms, mirroring the
-    * plan Spark's single-pass `signBitsQ` builds. */
+    * `j` — the ±1 components become literal +/− terms, the unrolled
+    * form of what Spark's native `lsh_bucket_packed_q` and
+    * `banded_lsh_keys_q` kernels compute (`SF.signBitsQ` is the same
+    * unrolled form on the Spark side, kept as their test reference). */
   private def signSumSql(j: Int, dims: Int, v: String): String =
     SF.plane(j, dims).zipWithIndex.map { case (s, i) =>
       if (i == 0) { if (s > 0) s"$v[1]" else s"-$v[1]" }
@@ -2951,9 +2953,9 @@ object PipelineQueries {
               |WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin)),
 
     // ---- ANN scale path: random-hyperplane LSH bucket histogram.
-    //      Sign bits come from the single-pass codegen'd signBitsQ —
-    //      one element_at read per dimension, not one re-zip of the
-    //      vector per plane. ----
+    //      The packed bucket is the native lsh_bucket_packed_q kernel
+    //      (SF.lshBucketQ) — one loop over the vector per row, not an
+    //      unrolled per-plane expression tree. ----
     QuerySpec("sim_lsh_buckets",
       (s, d) => {
         NativeExpressions.register(s)

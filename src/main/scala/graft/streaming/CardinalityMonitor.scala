@@ -51,17 +51,18 @@ object CardinalityMonitor {
   private def h60OfFp(fp: Column): Column =
     conv(substring(hex(fp), 1, 15), 16, 10).cast(LongType)
 
-  /** The batch's sketch contribution: distinct fingerprint hashes,
-    * k smallest. Plans as a TakeOrdered over the batch's distinct —
-    * never a global sort. */
-  private def minK(batch: DataFrame, k: Int): DataFrame =
-    batch.select(h60OfFp(col("__fp")).as("h"))
+  /** A sketch contribution from content fingerprints (column `fp`):
+    * distinct hashes, k smallest. Plans as a TakeOrdered over the
+    * distinct — never a global sort. */
+  private def minK(fps: DataFrame, k: Int): DataFrame =
+    fps.select(h60OfFp(col("fp")).as("h"))
       .distinct().orderBy(col("h")).limit(k)
 
-  /** [[StreamIngest.startLogged]] plus the sketch plane: each
-    * micro-batch publishes its files as one commit-log version and
-    * installs that version's ≤k-row KMV contribution. A replayed
-    * batch re-derives a subset of already-merged hashes — harmless by
+  /** [[StreamIngest.startLogged]] plus the sketch plane: an
+    * admit-everything gate whose post-publish hook installs each
+    * version's ≤k-row KMV contribution. A batch the resume filter
+    * empties publishes nothing and installs nothing; a replayed batch
+    * re-derives a subset of already-merged hashes — harmless by
     * idempotence; a crash between publish and install is healed at
     * the next start by the watermark reconcile. */
   def startLoggedMonitored(stream: DataFrame, outDir: String, topic: String,
@@ -75,40 +76,31 @@ object CardinalityMonitor {
     // crash-window rebuilds re-fingerprint committed files, so the
     // format must round-trip exactly (the dedup gate's shared contract)
     DedupIngest.requireRereadable(format, "cardinality monitoring")
-    reconcile(spark, outDir, topic, format, k)
     // projection-only prep - partitioning preserved (r18)
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, format,
-      avroCodec, prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
-        val withFp = fresh.withColumn("__fp", DedupIngest.fingerprint(fresh))
-          .persist()
-        try {
-          val contribution = minK(withFp, k)
-          val manifest = write(withFp.drop("__fp"))
-          val version = CommitLog.publish(spark, outDir, topic,
-            manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-          DedupIngest.installVersionFile(DedupIngest.hfs(spark, outDir),
-            kmvDirPath(outDir, topic), version, contribution)
-          // auto-compaction: without it the plane grows one ≤k-row
-          // file per commit forever and estimate() degrades to
-          // O(versions·k) file opens on a long stream. Fold once the
-          // listing (metadata-scale, one plane dir) crosses the
-          // threshold — the min-k of a union IS the union's sketch,
-          // so estimates are unchanged by construction, and the
-          // crash-ordered install keeps a died-mid-fold plane
-          // readable (reconcile heals it like any other gap).
-          if (compactEvery > 0 &&
-            DedupIngest.fpFiles(DedupIngest.hfs(spark, outDir),
-              kmvDirPath(outDir, topic)).size > compactEvery) {
-            compact(spark, outDir, topic, k)
-            ()
-          }
-          manifest
-        } finally { withFp.unpersist(); () }
-      },
-      afterWrite = _ => ())
+    StreamIngest.commitLoop(stream, outDir, topic, checkpoint, trigger,
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true),
+      StreamIngest.Gate(
+        repair = () => { reconcile(spark, outDir, topic, format, k); () }),
+      hooks = Seq((version, _, admitted) => {
+        DedupIngest.installVersionFile(DedupIngest.hfs(spark, outDir),
+          kmvDirPath(outDir, topic), version,
+          minK(admitted.select(DedupIngest.fingerprint(admitted).as("fp")), k))
+        // auto-compaction: without it the plane grows one ≤k-row
+        // file per commit forever and estimate() degrades to
+        // O(versions·k) file opens on a long stream. Fold once the
+        // listing (metadata-scale, one plane dir) crosses the
+        // threshold — the min-k of a union IS the union's sketch,
+        // so estimates are unchanged by construction, and the
+        // crash-ordered install keeps a died-mid-fold plane
+        // readable (reconcile heals it like any other gap).
+        if (compactEvery > 0 &&
+          DedupIngest.fpFiles(DedupIngest.hfs(spark, outDir),
+            kmvDirPath(outDir, topic)).size > compactEvery) {
+          compact(spark, outDir, topic, k)
+          ()
+        }
+      }))
   }
 
   /** Heal the sketch plane against the commit log — versions above
@@ -119,9 +111,8 @@ object CardinalityMonitor {
                 format: String = "parquet", k: Int = K): Seq[Long] =
     DedupIngest.reconcileIndex(spark, outDir, topic,
       kmvDirPath(outDir, topic), KmvSchema,
-      rels => DedupIngest.fingerprintsOf(spark, outDir, topic, format, rels)
-        .select(h60OfFp(col("fp")).as("h"))
-        .distinct().orderBy(col("h")).limit(k))
+      rels => minK(DedupIngest.fingerprintsOf(spark, outDir, topic, format,
+        rels), k))
 
   /** The merged-sketch frame: global k smallest distinct hashes
     * across every version contribution — ≤ k·versions rows in, ≤ k

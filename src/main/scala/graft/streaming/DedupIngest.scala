@@ -492,9 +492,10 @@ object DedupIngest {
     * higher recall). Batch-internal near-dups land together (the gate
     * checks the COMMITTED corpus — same contract as the embedding
     * gate); records with fewer than 3 tokens bypass the gate entirely.
-    * Replays are idempotent via the offset resume filter; the crash
-    * window between data publish and index install is repaired by
-    * [[reconcileSignatures]] at every start. */
+    * Replays are idempotent via the offset resume filter. The `_mh`
+    * install is the loop's post-publish hook; the crash window between
+    * data publish and index install is repaired by
+    * [[reconcileSignatures]], the gate's start-time repair. */
   def startLoggedMinhashDeduped(stream: DataFrame, outDir: String,
                                 topic: String, flushSize: Int,
                                 checkpoint: String, textCol: String,
@@ -509,37 +510,28 @@ object DedupIngest {
     requireRereadable(format)
     val spark = stream.sparkSession
     NativeExpressions.register(spark)
-    reconcileSignatures(spark, outDir, topic, textCol, format)
     // one payload exchange per batch (r18): the admitted frame is
     // fresh filtered through a BROADCAST anti-join - partitioning
     // preserved from commitLoop's part-hash
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, format,
-      avroCodec, prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
-        val bsig = sigOf(fresh, textCol, Seq("part", "off"))
-        val dup = dupAgainstIndex(spark, outDir, topic, bsig,
-          Seq("part", "off"), minAgree, rowsPerBand)
-        // `fresh` is persisted by commitLoop; only the gated frame
-        // needs its own pin (isEmpty + write + re-sig would otherwise
-        // re-run the gate)
-        val admitted = fresh
-          .join(broadcast(dup), Seq("part", "off"), "left_anti").persist()
-        try {
-          if (admitted.isEmpty) Seq.empty
-          else {
-            val manifest = write(admitted)
-            val version = CommitLog.publish(spark, outDir, topic,
-              manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-            installVersionFile(hfs(spark, outDir), mhDirPath(outDir, topic),
-              version, sigOf(admitted, textCol, Seq("part", "off"))
-                .select(col("sig")))
-            manifest
-          }
-        } finally { admitted.unpersist(); () }
-      },
-      afterWrite = _ => ())
+    StreamIngest.commitLoop(stream, outDir, topic, checkpoint, trigger,
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true),
+      StreamIngest.Gate(
+        admit = fresh => {
+          val dup = dupAgainstIndex(spark, outDir, topic,
+            sigOf(fresh, textCol, Seq("part", "off")),
+            Seq("part", "off"), minAgree, rowsPerBand)
+          // pinned: the install hook re-signs the admitted records
+          fresh.join(broadcast(dup), Seq("part", "off"), "left_anti")
+            .persist()
+        },
+        repair = () => {
+          reconcileSignatures(spark, outDir, topic, textCol, format); ()
+        }),
+      hooks = Seq((version, _, admitted) =>
+        installVersionFile(hfs(spark, outDir), mhDirPath(outDir, topic),
+          version, sigOf(admitted, textCol, Seq("part", "off"))
+            .select(col("sig")))))
   }
 
   /** Embedding NEAR-dup admission gate — the streaming twin of the
@@ -574,77 +566,61 @@ object DedupIngest {
         " which only encodes cosine >= t for t > 0")
     val spark = stream.sparkSession
     NativeExpressions.register(spark)
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, "parquet",
-      "null", prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
+    StreamIngest.commitLoop(stream, outDir, topic, checkpoint, trigger,
+      StreamIngest.writerFor(outDir, topic, flushSize, "parquet", "null",
+        prePartitioned = true),
+      StreamIngest.Gate(admit = fresh => {
         // snapshot emptiness, not latestVersion: a remove-only history
         // has versions but no live files, and the empty-corpus answer
         // (admit everything) is the correct one there too
         val liveFiles = CommitLog.snapshot(spark, outDir, topic)
-        // `fresh` is already persisted by commitLoop — derivations
-        // below re-read the cache, not the source. Only the GATED
-        // frame gets its own pin: in the empty-corpus branch admitted
-        // IS fresh, and persisting/unpersisting it here would evict
-        // commitLoop's own cache entry out from under it.
-        val gated =
-          if (liveFiles.isEmpty) None
-          else Some {
-            val corpus = CommitLog
-              .readFiles(spark, outDir, topic, liveFiles)
-              .select(SF.quantize(col(vecCol)).as("cv"))
-            // corpus size for the rows-per-band derivation comes from
-            // the committed NAME ranges — zero IO, no extra corpus
-            // scan per micro-batch (corpus.count() was a second full
-            // read on top of the band-key join). An erasure gap only
-            // overestimates, and the derivation needs magnitude only.
-            val nameRe = graft.ingest.FileNaming.CommittedFilenameRegex.r
-            val estRows = liveFiles.map(_.split('/').last).collect {
-              case nameRe(t, _, s, e, _) if t == topic =>
-                e.toLong - s.toLong + 1
-            }.sum
-            val rows = math.min(maxRows, SF.recommendedRowsPerBand(
-              math.max(1L, estRows), targetBucket))
-            def keysOf(v: Column) =
-              SF.bandedLshKeysQ(v, bands, rows, dims, maxRows)
-            val fq = fresh.withColumn("__qv", SF.quantize(col(vecCol)))
-            val nk = fq.select(col("part"), col("off"), col("__qv"),
-              SF.intDot(col("__qv"), col("__qv")).as("__n2"),
-              explode(keysOf(col("__qv"))).as("k"))
-            val ck = corpus.select(col("cv"), explode(keysOf(col("cv"))).as("k"))
-            val d = call_function("dot_i64", col("__qv"), col("cv"))
-            val dupNew = ck.join(broadcast(nk), Seq("k"))
-              .select(col("part"), col("off"), col("__qv"), col("__n2"),
-                col("cv")).distinct()
-              // d > 0 guards the zero-quantized degenerate: norm 0
-              // makes the RHS 0, and 0 >= 0 would spuriously reject a
-              // vector whose cosine to everything is UNDEFINED. The
-              // batch dedup_embedding_incremental carries the same
-              // dot > 0 guard (its division form would instead throw
-              // DIVIDE_BY_ZERO under Spark's default ANSI mode), so
-              // both gates agree an undefined similarity blocks
-              // nothing.
-              .filter(d > 0 && d.cast("double") >= lit(threshold) *
-                sqrt(col("__n2").cast("double")) *
-                sqrt(SF.intDot(col("cv"), col("cv")).cast("double")))
-              .select(col("part"), col("off")).distinct()
-            fq.join(broadcast(dupNew), Seq("part", "off"), "left_anti")
-              .drop("__qv")
-              .persist() // isEmpty + write would re-run the corpus verify
-          }
-        val admitted = gated.getOrElse(fresh)
-        try {
-          if (admitted.isEmpty) Seq.empty
-          else {
-            val manifest = write(admitted)
-            CommitLog.publish(spark, outDir, topic,
-              manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-            manifest
-          }
-        } finally { gated.foreach(_.unpersist()); () }
-      },
-      afterWrite = _ => ())
+        if (liveFiles.isEmpty) fresh
+        else {
+          val corpus = CommitLog
+            .readFiles(spark, outDir, topic, liveFiles)
+            .select(SF.quantize(col(vecCol)).as("cv"))
+          // corpus size for the rows-per-band derivation comes from
+          // the committed NAME ranges — zero IO, no extra corpus
+          // scan per micro-batch (corpus.count() was a second full
+          // read on top of the band-key join). An erasure gap only
+          // overestimates, and the derivation needs magnitude only.
+          val nameRe = graft.ingest.FileNaming.CommittedFilenameRegex.r
+          val estRows = liveFiles.map(_.split('/').last).collect {
+            case nameRe(t, _, s, e, _) if t == topic =>
+              e.toLong - s.toLong + 1
+          }.sum
+          val rows = math.min(maxRows, SF.recommendedRowsPerBand(
+            math.max(1L, estRows), targetBucket))
+          def keysOf(v: Column) =
+            SF.bandedLshKeysQ(v, bands, rows, dims, maxRows)
+          val fq = fresh.withColumn("__qv", SF.quantize(col(vecCol)))
+          val nk = fq.select(col("part"), col("off"), col("__qv"),
+            SF.intDot(col("__qv"), col("__qv")).as("__n2"),
+            explode(keysOf(col("__qv"))).as("k"))
+          val ck = corpus.select(col("cv"), explode(keysOf(col("cv"))).as("k"))
+          val d = call_function("dot_i64", col("__qv"), col("cv"))
+          val dupNew = ck.join(broadcast(nk), Seq("k"))
+            .select(col("part"), col("off"), col("__qv"), col("__n2"),
+              col("cv")).distinct()
+            // d > 0 guards the zero-quantized degenerate: norm 0
+            // makes the RHS 0, and 0 >= 0 would spuriously reject a
+            // vector whose cosine to everything is UNDEFINED. The
+            // batch dedup_embedding_incremental carries the same
+            // dot > 0 guard (its division form would instead throw
+            // DIVIDE_BY_ZERO under Spark's default ANSI mode), so
+            // both gates agree an undefined similarity blocks
+            // nothing.
+            .filter(d > 0 && d.cast("double") >= lit(threshold) *
+              sqrt(col("__n2").cast("double")) *
+              sqrt(SF.intDot(col("cv"), col("cv")).cast("double")))
+            .select(col("part"), col("off")).distinct()
+          // pinned: verified once into the cache, the writer's plan
+          // runs fewer jobs than with the verify inlined (the job
+          // counts are pinned in LoopJobCountSpec)
+          fq.join(broadcast(dupNew), Seq("part", "off"), "left_anti")
+            .drop("__qv").persist()
+        }
+      }))
   }
 
   /** [[StreamIngest.startLogged]] with the content-dedup admission
@@ -652,7 +628,10 @@ object DedupIngest {
     * lowest (part, off) — deterministic, so a crash-replay reproduces
     * the same files. A batch whose every record is a duplicate
     * publishes nothing (dropping IS the commit for those records; the
-    * stream checkpoint still advances past them). */
+    * stream checkpoint still advances past them). The gate is the
+    * admit stage of [[StreamIngest.commitLoop]]: the `_fp` install of
+    * the admitted fingerprints is its post-publish hook, and
+    * [[reconcileFingerprints]] its start-time repair. */
   def startLoggedDeduped(stream: DataFrame, outDir: String, topic: String,
                          flushSize: Int, checkpoint: String,
                          trigger: Option[Trigger] = None,
@@ -660,48 +639,43 @@ object DedupIngest {
                          avroCodec: String = "null"): StreamingQuery = {
     requireRereadable(format)
     val spark = stream.sparkSession
-    reconcileFingerprints(spark, outDir, topic, format)
     val write = StreamIngest.writerFor(outDir, topic, flushSize, format,
       avroCodec, prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
-        val withFp = fresh.withColumn("__fp", fingerprint(fresh))
-        // deterministic in-batch survivor: lowest (part, off) per fp
-        val first = withFp.groupBy(col("__fp"))
-          .agg(min(struct(col("part"), col("off"))).as("k"))
-          .select(col("__fp"), col("k.part").as("part"),
-            col("k.off").as("off"))
-        // broadcast: `first` is one row per distinct in-batch fp (the
-        // same size class as batchFps below, already broadcast) - and
-        // the explicit hint keeps the semi-join from ever re-shuffling
-        // the payload, preserving commitLoop's part-hash for the
-        // prePartitioned write
-        val survivors = withFp.join(broadcast(first),
-          Seq("__fp", "part", "off"), "left_semi")
-        // corpus gate: the index never shuffles — the batch's
-        // fingerprints broadcast INTO it, the (small) known-set
-        // broadcasts back
-        val batchFps = survivors.select(col("__fp").as("fp")).distinct()
-        val known = fingerprintIndex(spark, outDir, topic)
-          .join(broadcast(batchFps), Seq("fp"), "left_semi").distinct()
-        val novel = survivors
-          .join(broadcast(known), survivors("__fp") === known("fp"),
-            "left_anti")
-          .persist()
-        try {
-          if (novel.isEmpty) Seq.empty
-          else {
-            val novelFps = novel.select(col("__fp").as("fp")).distinct()
-            val manifest = write(novel.drop("__fp"))
-            val version = CommitLog.publish(spark, outDir, topic,
-              manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-            writeFpFile(spark, outDir, topic, version, novelFps)
-            manifest
-          }
-        } finally { novel.unpersist(); () }
-      },
-      afterWrite = _ => ())
+    // the admitted frame keeps its `__fp` column for the `_fp` install
+    // hook, so fingerprints are computed once per batch
+    StreamIngest.commitLoop(stream, outDir, topic, checkpoint, trigger,
+      b => write(b.drop("__fp")),
+      StreamIngest.Gate(
+        admit = fresh => {
+          val withFp = fresh.withColumn("__fp", fingerprint(fresh))
+          // deterministic in-batch survivor: lowest (part, off) per fp
+          val first = withFp.groupBy(col("__fp"))
+            .agg(min(struct(col("part"), col("off"))).as("k"))
+            .select(col("__fp"), col("k.part").as("part"),
+              col("k.off").as("off"))
+          // broadcast: `first` is one row per distinct in-batch fp (the
+          // same size class as batchFps below, already broadcast) - and
+          // the explicit hint keeps the semi-join from ever re-shuffling
+          // the payload, preserving commitLoop's part-hash for the
+          // prePartitioned write
+          val survivors = withFp.join(broadcast(first),
+            Seq("__fp", "part", "off"), "left_semi")
+          // corpus gate: the index never shuffles — the batch's
+          // fingerprints broadcast INTO it, the (small) known-set
+          // broadcasts back
+          val batchFps = survivors.select(col("__fp").as("fp")).distinct()
+          val known = fingerprintIndex(spark, outDir, topic)
+            .join(broadcast(batchFps), Seq("fp"), "left_semi").distinct()
+          // pinned: the install hook reads the admitted fingerprints
+          survivors
+            .join(broadcast(known), survivors("__fp") === known("fp"),
+              "left_anti")
+            .persist()
+        },
+        repair = () => { reconcileFingerprints(spark, outDir, topic, format); () }),
+      hooks = Seq((version, _, admitted) =>
+        writeFpFile(spark, outDir, topic, version,
+          admitted.select(col("__fp").as("fp")))))
   }
 
   /** Blocklist admission gate: drop any record whose content
@@ -765,11 +739,10 @@ object DedupIngest {
           lit(blBytes), xxhash64(fp))
       }
     // broadcast anti-join gate - partitioning preserved (r18)
-    val write = StreamIngest.writerFor(outDir, topic, flushSize, format,
-      avroCodec, prePartitioned = true)
-    StreamIngest.commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = fresh => {
+    StreamIngest.commitLoop(stream, outDir, topic, checkpoint, trigger,
+      StreamIngest.writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true),
+      StreamIngest.Gate(admit = fresh => {
         val withFp = fresh.withColumn("__fp", fingerprint(fresh))
         val probe = probeOf(col("__fp"))
         // exact verify on the flagged sliver only: its distinct fps
@@ -784,19 +757,12 @@ object DedupIngest {
         val blocked =
           if (flagged.isEmpty) flagged
           else bl.join(broadcast(flagged), Seq("fp"), "left_semi")
-        val admitted = withFp
+        // pinned for the same reason as the embedding gate's verify:
+        // fewer jobs per batch than the writer re-planning both joins
+        withFp
           .join(broadcast(blocked), withFp("__fp") === blocked("fp"),
-            "left_anti").persist()
-        try {
-          if (admitted.isEmpty) Seq.empty
-          else {
-            val manifest = write(admitted.drop("__fp"))
-            CommitLog.publish(spark, outDir, topic,
-              manifest.map(c => StreamIngest.relPath(outDir, topic, c.path)))
-            manifest
-          }
-        } finally { admitted.unpersist(); () }
-      },
-      afterWrite = _ => ())
+            "left_anti")
+          .drop("__fp").persist()
+      }))
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ingest.{BatchWriter, CommitLog}
 import graft.operators.{IvfIndex, KMeans}
 
 /** Streaming ingestion into a SERVED ANN index: embedding vectors
@@ -14,7 +13,9 @@ import graft.operators.{IvfIndex, KMeans}
   * cell-partitioned `ivf_vectors` topic as one commit-log version per
   * micro-batch.
   *
-  * Contracts inherited wholesale from the logged commit loop:
+  * Each loop IS [[StreamIngest.startLogged]] over the encoded frame,
+  * so every contract is inherited wholesale from the logged commit
+  * loop (including its fixed log-checkpoint cadence):
   *   - exactly-once across crash replays (the vector id IS the offset;
   *     arrivals must be id-ascending like any offset stream, and the
   *     resume filter drops already-committed ids per cell partition —
@@ -39,17 +40,8 @@ object IndexIngest {
     val framed = KMeans.assign(stream, cents)
       .select(col("cell").as("part"), col("id").as("off"), col("v"),
         col("cell"))
-    StreamIngest.commitLoop(framed, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, indexDir, IvfIndex.VectorsTopic),
-      writeFn = b =>
-        BatchWriter.write(b, indexDir, IvfIndex.VectorsTopic, flushSize,
-          prePartitioned = true),
-      afterWrite = manifest => {
-        CommitLog.publish(spark, indexDir, IvfIndex.VectorsTopic,
-          manifest.map(c =>
-            StreamIngest.relPath(indexDir, IvfIndex.VectorsTopic, c.path)))
-        ()
-      })
+    StreamIngest.startLogged(framed, indexDir, IvfIndex.VectorsTopic,
+      flushSize, checkpoint, trigger)
   }
 
   /** The IVF-PQ twin: `(id, v)` vectors assign to their coarse cell,
@@ -68,18 +60,8 @@ object IndexIngest {
     val (books, subDims) = IvfIndex.pqBooks(spark, indexDir,
       IvfIndex.IvfPqCodebooksTopic) // frozen at start
     val framed = IvfIndex.ivfPqEncodeFrame(stream, cents, books, subDims)
-    StreamIngest.commitLoop(framed, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, indexDir,
-        IvfIndex.IvfPqCodesTopic),
-      writeFn = b =>
-        BatchWriter.write(b, indexDir, IvfIndex.IvfPqCodesTopic, flushSize,
-          prePartitioned = true),
-      afterWrite = manifest => {
-        CommitLog.publish(spark, indexDir, IvfIndex.IvfPqCodesTopic,
-          manifest.map(c =>
-            StreamIngest.relPath(indexDir, IvfIndex.IvfPqCodesTopic, c.path)))
-        ()
-      })
+    StreamIngest.startLogged(framed, indexDir, IvfIndex.IvfPqCodesTopic,
+      flushSize, checkpoint, trigger)
   }
 
   /** The PQ twin: `(id, v)` vectors encode to M codes under the
@@ -94,16 +76,7 @@ object IndexIngest {
     val spark = stream.sparkSession
     val (books, subDims) = IvfIndex.pqBooks(spark, indexDir) // frozen
     val framed = IvfIndex.pqEncodeFrame(stream, books, subDims, parts)
-    StreamIngest.commitLoop(framed, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, indexDir, IvfIndex.PqCodesTopic),
-      writeFn = b =>
-        BatchWriter.write(b, indexDir, IvfIndex.PqCodesTopic, flushSize,
-          prePartitioned = true),
-      afterWrite = manifest => {
-        CommitLog.publish(spark, indexDir, IvfIndex.PqCodesTopic,
-          manifest.map(c =>
-            StreamIngest.relPath(indexDir, IvfIndex.PqCodesTopic, c.path)))
-        ()
-      })
+    StreamIngest.startLogged(framed, indexDir, IvfIndex.PqCodesTopic,
+      flushSize, checkpoint, trigger)
   }
 }

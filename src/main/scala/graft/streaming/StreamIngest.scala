@@ -35,16 +35,16 @@ object StreamIngest {
     * and then maintained incrementally from each batch's commit
     * manifest — the recursive directory listing does not re-run per
     * micro-batch, so its cost no longer grows with total file count.
-    * A restart re-lists, which is exactly the crash-recovery contract. */
+    * A restart re-lists, which is exactly the crash-recovery contract.
+    * The one [[commitLoop]] caller that publishes nothing. */
   def start(stream: DataFrame, outDir: String, topic: String, flushSize: Int,
             checkpoint: String, trigger: Option[Trigger] = None,
             format: String = "parquet",
             avroCodec: String = "null"): StreamingQuery =
-    commitLoop(stream, checkpoint, trigger,
-      initial = BatchWriter.maxCommittedOffsets(stream.sparkSession, outDir, topic),
-      writeFn = writerFor(outDir, topic, flushSize, format, avroCodec,
+    commitLoop(stream, outDir, topic, checkpoint, trigger,
+      writerFor(outDir, topic, flushSize, format, avroCodec,
         prePartitioned = true),
-      afterWrite = _ => ())
+      logged = false)
 
   /** The per-batch committer for a (format, codec) choice — B1's Avro
     * writes through [[AvroSink]] (the reference's default on-disk
@@ -85,18 +85,53 @@ object StreamIngest {
     writer.foreachBatch { (batch: DataFrame, _: Long) => body(batch) }.start()
   }
 
-  /** The shared micro-batch commit loop: dedup → resume-filter →
-    * write → (hook) → advance offsets. `writeFn` is the batch
-    * committer (BatchWriter / AvroSink / a config's full dispatch);
-    * `afterWrite` runs after the batch's files are durably renamed and
-    * before the in-memory offsets advance — the logged path publishes
-    * there. */
-  private[streaming] def commitLoop(stream: DataFrame, checkpoint: String,
+  /** The fixed log-checkpoint cadence of every logged loop: each
+    * published version that is a multiple of this rebases the topic's
+    * log with [[CommitLog.checkpoint]], so a year-old topic's snapshot
+    * and restart replay only the tail since, not every version ever
+    * published. */
+  val LogCheckpointEvery = 64
+
+  /** A post-publish step of a logged loop: it gets the published
+    * version, the batch's manifest and the admitted frame that was
+    * written. Side-plane installs (`_fp`, `_mh`, `_kmv`), view refresh
+    * and Hive partition registration are hooks. */
+  private[streaming] type Hook =
+    (Long, Seq[BatchWriter.CommittedFile], DataFrame) => Unit
+
+  /** An admission stage of [[commitLoop]] — the per-batch
+    * probe-then-insert contract: `admit` maps the resume-filtered
+    * (pinned) batch to the records to commit, probing the gate's index
+    * if any; the insert is the gate's [[Hook]]. `admit` may persist
+    * its result — so the hooks never re-run the probe, or because the
+    * cached frame writes in fewer jobs — and the loop releases that pin
+    * after the hooks. `repair` heals the gate's side plane against the
+    * log once, before offsets are recovered. */
+  private[streaming] final case class Gate(
+      admit: DataFrame => DataFrame = identity,
+      repair: () => Unit = () => ())
+
+  /** The one single-topic micro-batch commit loop, in order: batch
+    * dedup → resume filter → `gate.admit` → write → (an empty manifest
+    * stops here: nothing published, no hook, no probe job) → publish
+    * ([[publishStep]]: one log version, the fixed checkpoint cadence,
+    * then `hooks`) → advance the in-memory offsets. `write` is the
+    * batch committer (BatchWriter / AvroSink / a config's full
+    * dispatch). Offsets come from the log, or — for the unlogged
+    * [[start]] (`logged = false`, which publishes nothing) — from a
+    * committed-filename listing. */
+  private[streaming] def commitLoop(stream: DataFrame, outDir: String,
+                         topic: String, checkpoint: String,
                          trigger: Option[Trigger],
-                         initial: Map[Long, Long],
-                         writeFn: DataFrame => Seq[BatchWriter.CommittedFile],
-                         afterWrite: Seq[BatchWriter.CommittedFile] => Unit): StreamingQuery = {
-    var committed = initial
+                         write: DataFrame => Seq[BatchWriter.CommittedFile],
+                         gate: Gate = Gate(),
+                         hooks: Seq[Hook] = Nil,
+                         logged: Boolean = true): StreamingQuery = {
+    val spark = stream.sparkSession
+    gate.repair()
+    var committed =
+      if (logged) CommitLog.maxOffsets(spark, outDir, topic)
+      else BatchWriter.maxCommittedOffsets(spark, outDir, topic)
     batchQuery(stream, checkpoint, trigger) { batch =>
       // ONE payload exchange per micro-batch (r18): hash the batch by
       // `part` up front, then every downstream step rides that
@@ -111,26 +146,48 @@ object StreamIngest {
       // committed-offset filter alone cannot catch
       val deduped = batch.repartition(col("part"))
         .dropDuplicates("part", "off")
-      // pin the filtered batch: the write's staging/manifest jobs
-      // would otherwise re-read the source twice
+      // pin the filtered batch: the gate's probe and the write's
+      // staging/manifest jobs would otherwise each re-read the source
       val fresh = BatchWriter.resumeFrom(deduped, committed).persist()
       try {
-        // no isEmpty pre-probe (r17): it cost one extra job on EVERY
-        // batch to optimize only the fully-replayed-batch case, which
-        // the writer handles anyway — an empty staging write commits
-        // nothing and returns an empty manifest, and the manifest
-        // guard keeps afterWrite (log publish, views) from seeing a
-        // no-op batch, exactly as the old branch did.
-        val manifest = writeFn(fresh)
-        if (manifest.nonEmpty) {
-          afterWrite(manifest)
-          committed = manifest.foldLeft(committed) { (m, f) =>
-            m.updated(f.partition, math.max(m.getOrElse(f.partition, -1L), f.endOffset))
+        val admitted = gate.admit(fresh)
+        try {
+          // no isEmpty probe: an empty staging write commits nothing
+          // and returns an empty manifest, which is the whole guard
+          val manifest = write(admitted)
+          if (manifest.nonEmpty) {
+            if (logged) publishStep(spark, outDir, topic, manifest, admitted, hooks)
+            committed = advance(committed, manifest)
           }
-        }
+        } finally if (admitted ne fresh) admitted.unpersist() // the gate's pin
       } finally { fresh.unpersist(); () }
     }
   }
+
+  /** The publish half of every logged loop, shared with the
+    * multi-topic demux: publish `manifest` as ONE atomic version of
+    * `topic`'s log, checkpoint the log every [[LogCheckpointEvery]]th
+    * version, then run the post-publish hooks. Returns the version. */
+  private[streaming] def publishStep(spark: SparkSession, outDir: String,
+                          topic: String,
+                          manifest: Seq[BatchWriter.CommittedFile],
+                          admitted: DataFrame, hooks: Seq[Hook]): Long = {
+    val v = CommitLog.publish(spark, outDir, topic,
+      manifest.map(c => relPath(outDir, topic, c.path)))
+    if (v > 0 && v % LogCheckpointEvery == 0) {
+      CommitLog.checkpoint(spark, outDir, topic)
+      ()
+    }
+    hooks.foreach(_(v, manifest, admitted))
+    v
+  }
+
+  /** Per-partition committed offsets after `manifest`'s files. */
+  private def advance(committed: Map[Long, Long],
+                      manifest: Seq[BatchWriter.CommittedFile]): Map[Long, Long] =
+    manifest.foldLeft(committed) { (m, f) =>
+      m.updated(f.partition, math.max(m.getOrElse(f.partition, -1L), f.endOffset))
+    }
 
   /** [[start]] with the transactional metadata-log commit: each
     * micro-batch's files publish as ONE atomic `CommitLog` version and
@@ -143,29 +200,27 @@ object StreamIngest {
     * offsets shift the tail grouping, the stale partial file simply
     * stays unreferenced — log readers can never see it next to its
     * overlapping replacement (the double-read a directory lister WOULD
-    * hit), and `vacuum` reclaims it at leisure. */
+    * hit), and `vacuum` reclaims it at leisure.
+    *
+    * A13's wallclock scheduled rotation (`rotate.schedule.interval.ms`,
+    * `TopicPartitionWriter.java:297-310`) is the trigger form,
+    * `trigger = Some(Trigger.ProcessingTime(periodMs))`: a micro-batch
+    * holding FEWER than `flushSize` records still commits its file
+    * when the schedule fires — the partial-file flush the reference
+    * tests (`DataWriterAvroTest.java:356-403`). Spark fires
+    * ProcessingTime at epoch-aligned multiples of the period, i.e. the
+    * reference's midnight-anchored grid for periods dividing 24h
+    * (`Rotation.nextTimeAdjustedByDay`, equivalence property-tested in
+    * RotationSpec); the reference re-anchors other periods at each
+    * midnight, so pick a divisor period to keep the contracts equal. */
   def startLogged(stream: DataFrame, outDir: String, topic: String,
                   flushSize: Int, checkpoint: String,
                   trigger: Option[Trigger] = None,
                   format: String = "parquet",
-                  avroCodec: String = "null",
-                  logCheckpointEvery: Int = 64): StreamingQuery = {
-    val spark = stream.sparkSession
-    commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = writerFor(outDir, topic, flushSize, format, avroCodec,
-        prePartitioned = true),
-      afterWrite = manifest => {
-        val v = CommitLog.publish(spark, outDir, topic,
-          manifest.map(c => relPath(outDir, topic, c.path)))
-        // rebase snapshot replay periodically so a year-old topic's
-        // reads stay O(tail), not O(every version ever published)
-        if (logCheckpointEvery > 0 && v > 0 && v % logCheckpointEvery == 0) {
-          CommitLog.checkpoint(spark, outDir, topic)
-          ()
-        }
-      })
-  }
+                  avroCodec: String = "null"): StreamingQuery =
+    commitLoop(stream, outDir, topic, checkpoint, trigger,
+      writerFor(outDir, topic, flushSize, format, avroCodec,
+        prePartitioned = true))
 
   /** [[startLogged]] plus the reference's LIVE Hive sync
     * (`DataWriter.java:383-420` bootstrap + the first-write
@@ -183,19 +238,17 @@ object StreamIngest {
                       flushSize: Int, checkpoint: String, table: String,
                       database: Option[String] = None,
                       trigger: Option[Trigger] = None,
-                      format: String = "parquet",
-                      logCheckpointEvery: Int = 64): StreamingQuery = {
+                      format: String = "parquet"): StreamingQuery = {
     val spark = stream.sparkSession
-    val initial = CommitLog.maxOffsets(spark, outDir, topic)
     var tableReady = false
     // partitions already in the catalog: everything the log already
     // covers (restart path — their dirs exist), then grow per batch
-    val registered = scala.collection.mutable.Set.empty[Long] ++ initial.keys
+    val registered = scala.collection.mutable.Set.empty[Long] ++
+      CommitLog.maxOffsets(spark, outDir, topic).keys
     val write = writerFor(outDir, topic, flushSize, format, "null",
       prePartitioned = true)
-    commitLoop(stream, checkpoint, trigger,
-      initial = initial,
-      writeFn = batch => {
+    commitLoop(stream, outDir, topic, checkpoint, trigger,
+      write = batch => {
         if (!tableReady) {
           database.foreach(TableCatalog.createDatabase(spark, _))
           TableCatalog.createExternalTable(spark, table, s"$outDir/$topic",
@@ -209,24 +262,22 @@ object StreamIngest {
         }
         write(batch)
       },
-      afterWrite = manifest => {
-        val v = CommitLog.publish(spark, outDir, topic,
-          manifest.map(c => relPath(outDir, topic, c.path)))
-        // same replay-rebase cadence as startLogged: without it a
-        // long-lived Hive-synced stream accumulates one log version
-        // per micro-batch and every restart/read replays them all
-        if (logCheckpointEvery > 0 && v > 0 && v % logCheckpointEvery == 0) {
-          CommitLog.checkpoint(spark, outDir, topic)
-          ()
-        }
+      hooks = Seq((_, manifest, _) =>
         manifest.map(_.partition).distinct.filterNot(registered).foreach { p =>
           TableCatalog.addPartition(spark, table, Map("partition" -> p),
             database)
           registered += p
           ()
-        }
-      })
+        }))
   }
+
+  /** The view-refresh hook: every [[MaterializedAgg.ViewDef]] of
+    * `topic` folds the batch's appends forward off the log. */
+  private def refreshViews(spark: SparkSession, outDir: String, topic: String,
+                           views: Seq[graft.ingest.MaterializedAgg.ViewDef],
+                           format: String): Hook =
+    (_, _, _) => graft.ingest.MaterializedAgg.refreshAll(spark, outDir, topic,
+      views, format)
 
   /** [[startLogged]] plus always-fresh materialized views: after each
     * micro-batch's publish, every registered [[MaterializedAgg.ViewDef]]
@@ -241,25 +292,12 @@ object StreamIngest {
                            views: Seq[graft.ingest.MaterializedAgg.ViewDef],
                            trigger: Option[Trigger] = None,
                            format: String = "parquet",
-                           avroCodec: String = "null",
-                           logCheckpointEvery: Int = 64): StreamingQuery = {
-    val spark = stream.sparkSession
-    commitLoop(stream, checkpoint, trigger,
-      initial = CommitLog.maxOffsets(spark, outDir, topic),
-      writeFn = writerFor(outDir, topic, flushSize, format, avroCodec,
+                           avroCodec: String = "null"): StreamingQuery =
+    commitLoop(stream, outDir, topic, checkpoint, trigger,
+      writerFor(outDir, topic, flushSize, format, avroCodec,
         prePartitioned = true),
-      afterWrite = manifest => {
-        val v = CommitLog.publish(spark, outDir, topic,
-          manifest.map(c => relPath(outDir, topic, c.path)))
-        // same replay-rebase cadence as startLogged (see startLoggedHive)
-        if (logCheckpointEvery > 0 && v > 0 && v % logCheckpointEvery == 0) {
-          CommitLog.checkpoint(spark, outDir, topic)
-          ()
-        }
-        graft.ingest.MaterializedAgg.refreshAll(spark, outDir, topic,
-          views, format)
-      })
-  }
+      hooks = Seq(refreshViews(stream.sparkSession, outDir, topic, views,
+        format)))
 
   /** Restart schema re-inference — the reference's recover-time
     * re-read of the current schema from the latest committed file
@@ -436,14 +474,10 @@ object StreamIngest {
     val reproject = recoveryProjector(spark, root, topic, cfg)
     // SMTs run FIRST (the Connect runtime applies transforms before
     // the sink), then schema recovery projects the transformed shape
-    commitLoop(stream, checkpoint, cfgTrigger(cfg),
-      initial = CommitLog.maxOffsets(spark, root, topic),
-      writeFn = b => Retry.withBackoff(2, cfg.retryBackoffMs)(
+    commitLoop(stream, root, topic, checkpoint, cfgTrigger(cfg),
+      write = b => Retry.withBackoff(2, cfg.retryBackoffMs)(
         cfg.write(reproject(cfg.applySmts(b, includeRouters = false)),
-          outDir, topic)),
-      afterWrite = manifest =>
-        CommitLog.publish(spark, root, topic,
-          manifest.map(c => relPath(root, topic, c.path))))
+          outDir, topic)))
   }
 
   /** [[startLogged]] against the configured store root — the streaming
@@ -611,8 +645,7 @@ object StreamIngest {
                            scala.None,
                        views: Map[String,
                          Seq[graft.ingest.MaterializedAgg.ViewDef]] =
-                           Map.empty,
-                       logCheckpointEvery: Int = 64)
+                           Map.empty)
       : StreamingQuery = {
     require(rotationBucket.isEmpty || perTopicProjection.isEmpty,
       "per-topic schema projection writes through the per-topic " +
@@ -648,62 +681,44 @@ object StreamIngest {
         val fresh = BatchWriter.resumeFromMulti(deduped, committed.toMap)
           .persist()
         try {
-          // no isEmpty pre-probe (r17) — same reasoning as the
-          // single-topic loop: an all-replayed batch stages nothing
-          // and yields an empty manifest, and the per-topic publish
-          // loop below iterates zero groups.
-          {
-            val manifest = Retry.withBackoff(writeRetries, retryBackoffMs)(
-              // avro cannot join the dynamic-partitioned staging job;
-              // per-topic schema projection makes slices structurally
-              // DIFFERENT frames — both take the per-topic fan-out
-              // (O(topics) jobs over the cached batch, the reference's
-              // own per-writer shape)
-              if (format == "avro" || perTopicProjection.isDefined)
-                topics.toSeq.flatMap { t =>
-                  val slice0 = fresh.filter(col("topic") === t).drop("topic")
-                  val slice = perTopicProjection
-                    .map(p => p(t)(slice0)).getOrElse(slice0)
-                  if (slice.isEmpty) Seq.empty
-                  else if (format == "avro")
-                    // rotation rides the per-topic fan-out: the bucket
-                    // expression reads the slice's record-time column
-                    // (still present — only `topic` was dropped)
-                    AvroSink.write(slice, outDir, t, flushSize, pad,
-                      avroCodec, rotationBucket)
-                  else
-                    BatchWriter.write(slice, outDir, t, flushSize, pad, format)
-                }
-              else
-                BatchWriter.writeMulti(fresh, outDir, flushSize, pad, format,
-                  rotationBucket, rotationDrop, prePartitioned = true))
-            manifest.groupBy(_.topic).toSeq.sortBy(_._1)
-              .foreach { case (topic, files) =>
-                val v = CommitLog.publish(spark, outDir, topic, files.map { c =>
-                  s"partition=${c.partition}/" +
-                    new org.apache.hadoop.fs.Path(c.path).getName
-                })
-                // per-topic snapshot-replay rebase, same cadence
-                // contract as the single-topic plane
-                if (logCheckpointEvery > 0 && v > 0 &&
-                  v % logCheckpointEvery == 0) {
-                  CommitLog.checkpoint(spark, outDir, topic)
-                  ()
-                }
-                committed(topic) = files.foldLeft(committed(topic)) { (m, f) =>
-                  m.updated(f.partition,
-                    math.max(m.getOrElse(f.partition, -1L), f.endOffset))
-                }
-                // per-topic materialized views: refresh AFTER this
-                // topic's data publish (same ordering contract as
-                // startLoggedWithViews — a crash mid-refresh leaves
-                // the view stale, and its filename watermark back-
-                // fills it exactly on the topic's next batch)
-                views.get(topic).foreach(vs =>
-                  graft.ingest.MaterializedAgg.refreshAll(
-                    spark, outDir, topic, vs, format))
+          // an all-replayed batch stages nothing and yields an empty
+          // manifest, so the per-topic publish below iterates zero groups
+          val manifest = Retry.withBackoff(writeRetries, retryBackoffMs)(
+            // avro cannot join the dynamic-partitioned staging job;
+            // per-topic schema projection makes slices structurally
+            // DIFFERENT frames — both take the per-topic fan-out
+            // (O(topics) jobs over the cached batch, the reference's
+            // own per-writer shape)
+            if (format == "avro" || perTopicProjection.isDefined)
+              topics.toSeq.flatMap { t =>
+                val slice0 = fresh.filter(col("topic") === t).drop("topic")
+                val slice = perTopicProjection
+                  .map(p => p(t)(slice0)).getOrElse(slice0)
+                if (slice.isEmpty) Seq.empty
+                else if (format == "avro")
+                  // rotation rides the per-topic fan-out: the bucket
+                  // expression reads the slice's record-time column
+                  // (still present — only `topic` was dropped)
+                  AvroSink.write(slice, outDir, t, flushSize, pad,
+                    avroCodec, rotationBucket)
+                else
+                  BatchWriter.write(slice, outDir, t, flushSize, pad, format)
               }
-          }
+            else
+              BatchWriter.writeMulti(fresh, outDir, flushSize, pad, format,
+                rotationBucket, rotationDrop, prePartitioned = true))
+          // per topic: the single-topic loop's publish → cadence →
+          // hook step; views refresh AFTER the topic's data publish
+          // (a crash mid-refresh leaves the view stale, and its
+          // filename watermark back-fills it on the topic's next batch)
+          manifest.groupBy(_.topic).toSeq.sortBy(_._1)
+            .foreach { case (topic, files) =>
+              publishStep(spark, outDir, topic, files,
+                fresh.filter(col("topic") === topic).drop("topic"),
+                views.get(topic).toSeq.map(
+                  refreshViews(spark, outDir, topic, _, format)))
+              committed(topic) = advance(committed(topic), files)
+            }
         } finally { fresh.unpersist(); () }
       } finally { deduped.unpersist(); () }
     }
@@ -738,36 +753,6 @@ object StreamIngest {
       prepare = _.withColumn("topic",
         when(isValid, lit(topic)).otherwise(lit(s"$topic.dlq"))))
   }
-
-  /** A13 — wallclock scheduled rotation in the streaming plane
-    * (`rotate.schedule.interval.ms`, `TopicPartitionWriter.java:297-310`
-    * + partial-file flush test `DataWriterAvroTest.java:356-403`): the
-    * commit cadence is a processing-time trigger at `periodMs`, and a
-    * micro-batch holding FEWER than `flushSize` records still commits
-    * its file when the schedule fires — the partial-file flush the
-    * reference tests.
-    *
-    * Day alignment: Spark's ProcessingTime trigger fires at
-    * epoch-aligned multiples of the period; the epoch is anchored at
-    * UTC midnight, so for periods dividing 24h these are exactly the
-    * reference's midnight-anchored fire times
-    * (`Rotation.nextTimeAdjustedByDay` — equivalence property-tested
-    * in RotationSpec). Periods that do not divide a day re-anchor at
-    * each midnight in the reference; pick a divisor period (the
-    * reference's own default configs do) to keep the contracts equal. */
-  def startScheduled(stream: DataFrame, outDir: String, topic: String,
-                     flushSize: Int, checkpoint: String,
-                     periodMs: Long): StreamingQuery =
-    start(stream, outDir, topic, flushSize, checkpoint,
-      Some(Trigger.ProcessingTime(periodMs)))
-
-  /** [[startScheduled]] through the transactional commit log: the
-    * schedule-fired partial file is published as an atomic version. */
-  def startScheduledLogged(stream: DataFrame, outDir: String, topic: String,
-                           flushSize: Int, checkpoint: String,
-                           periodMs: Long): StreamingQuery =
-    startLogged(stream, outDir, topic, flushSize, checkpoint,
-      Some(Trigger.ProcessingTime(periodMs)))
 
   /** Event-time bucketing with late-data handling (A12's semantics:
     * a time bucket closes only once a later record advances the clock —

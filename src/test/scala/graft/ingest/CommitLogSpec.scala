@@ -917,9 +917,9 @@ class CommitLogSpec extends SparkSuite {
     val s = MemoryStream[(Long, Long, String)]
     // flushSize 5 but only 2 records: the schedule fire must flush AND
     // publish the partial file as a log version (A13 through the log)
-    val q = graft.streaming.StreamIngest.startScheduledLogged(
+    val q = graft.streaming.StreamIngest.startLogged(
       s.toDF().toDF("part", "off", "payload"), out, "t", flushSize = 5, ckpt,
-      periodMs = 200L)
+      Some(org.apache.spark.sql.streaming.Trigger.ProcessingTime(200L)))
     s.addData((0L, 0L, "a"), (0L, 1L, "b"))
     q.processAllAvailable()
     q.stop()
@@ -1073,35 +1073,6 @@ class CommitLogSpec extends SparkSuite {
     assert(CommitLog.vacuum(spark, out, "t", graceMs = 0) === Seq.empty)
     assert(f.exists(new Path(s"$out/t/_commitlog/1.ckpt")),
       "vacuum must never touch log internals")
-  }
-
-  test("compactLogged leaves a checkpoint at the swap; streaming checkpoints on cadence") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val out = Files.createTempDirectory("clog-ckpt-auto").toString
-    (0 until 3).foreach { b =>
-      CommitLog.writeLogged(
-        frame(6).filter(col("off").between(b * 2, b * 2 + 1)), out, "t", 1)
-    }
-    val v = CommitLog.compactLogged(spark, out, "t", targetRecords = 5)
-    val f = CommitLog.fs(spark, out)
-    assert(f.exists(new Path(s"$out/t/_commitlog/$v.ckpt")))
-    assert(CommitLog.read(spark, out, "t").count() === 6)
-    // streaming: every Nth published version checkpoints the log
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = Files.createTempDirectory("clog-ckpt-sckpt").toString
-    val s = MemoryStream[(Long, Long, String)]
-    val q = graft.streaming.StreamIngest.startLogged(
-      s.toDF().toDF("part", "off", "payload"), out, "u", flushSize = 10, ckpt,
-      logCheckpointEvery = 2)
-    (0 until 5).foreach { i =>
-      s.addData((0L, i.toLong, s"p$i"))
-      q.processAllAvailable()
-    }
-    q.stop()
-    assert(CommitLog.latestVersion(spark, out, "u") === 4L)
-    assert(f.exists(new Path(s"$out/u/_commitlog/2.ckpt")))
-    assert(f.exists(new Path(s"$out/u/_commitlog/4.ckpt")))
-    assert(CommitLog.read(spark, out, "u").count() === 5)
   }
 
   test("diffFiles shows churn; diffRows is the compaction-invariant logical change feed") {

@@ -79,6 +79,28 @@ class CardinalityMonitorSpec extends SparkSuite {
     assert(CardinalityMonitor.estimate(spark, out, "t") === 3L)
   }
 
+  test("a replay of only committed records publishes nothing; the query lives") {
+    implicit val sqlCtx = spark.sqlContext
+    val out = Files.createTempDirectory("graft-kmv-replay").toString
+    val (s1, q1) = startOn(out,
+      Files.createTempDirectory("graft-kmv-ckpt10").toString)
+    s1.addData((0L, 0L, "a"), (0L, 1L, "b"))
+    q1.processAllAvailable()
+    q1.stop()
+    // fresh checkpoint, and the source re-delivers ONLY committed
+    // offsets: the resume filter empties the batch
+    val (s2, q2) = startOn(out,
+      Files.createTempDirectory("graft-kmv-ckpt11").toString)
+    try {
+      s2.addData((0L, 0L, "a"), (0L, 1L, "b"))
+      q2.processAllAvailable()
+      assert(q2.isActive && q2.exception.isEmpty,
+        s"a fully replayed batch must not fail the query: ${q2.exception}")
+    } finally q2.stop()
+    assert(CommitLog.latestVersion(spark, out, "t") === 0L)
+    assert(CardinalityMonitor.estimate(spark, out, "t") === 2L)
+  }
+
   test("a missing sketch contribution heals from the committed files at restart") {
     implicit val sqlCtx = spark.sqlContext
     val out = Files.createTempDirectory("graft-kmv-heal").toString
